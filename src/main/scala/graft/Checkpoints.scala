@@ -38,63 +38,6 @@ object Checkpoints {
     * `localCheckpoint(eager)`. Lazy cuts (`eager = false`) still keep
     * the plan tree one-round deep; materialization happens at the
     * caller's next action in either mode. */
-  /** Operators that iterate in a cloned `newSession()` (private
-    * SQLConf for shuffle-parallelism sizing) must carry the caller's
-    * checkpoint choice into the clone — `newSession` starts from
-    * context defaults, not the parent's runtime conf. */
-  def propagate(from: org.apache.spark.sql.SparkSession,
-      to: org.apache.spark.sql.SparkSession): Unit = {
-    to.conf.set(ReliableKey, from.conf.get(ReliableKey, "false"))
-    from.conf.getOption(DirKey).foreach(to.conf.set(DirKey, _))
-    // the staging-base override must ride along too: the local-mode
-    // checkpoint fallback (and any staged store touched from inside
-    // the clone) resolves Staging.dir against the CLONE's conf
-    from.conf.getOption("spark.graft.staging.dir")
-      .foreach(to.conf.set("spark.graft.staging.dir", _))
-  }
-
-  /** Cloned-session scope for BOUNDED-SLICE pin queries (the
-    * `*_exact` DuckDB pins): their working set is a constant by
-    * construction (a literal `id < N` slice plus a fixed plant set —
-    * it never grows with the corpus), yet under the session default
-    * every one of their ~dozens of AQE stage-jobs schedules
-    * `spark.sql.shuffle.partitions` (= cpu count on the harness)
-    * tasks over a few thousand rows — pure task-dispatch overhead
-    * that GROWS with core count (the round-17 scaling block measured
-    * q_dedup_banded_exact 3× SLOWER at 32 cores than at 8). The same
-    * device the iterative operators use ([[graft.llm.Dedup
-    * .connectedComponents]], [[graft.ops.Graph]]): a cloned session
-    * (same SparkContext, private SQLConf) with parallelism sized to
-    * the DATA — a bounded slice is one/few partitions at any corpus
-    * scale, which is exactly what AQE would coalesce to by size —
-    * and the result rebound to the caller's session on the way out
-    * (row order preserved: createDataFrame over the computed RDD
-    * keeps partition order, so a sorted pin output stays sorted). */
-  object BoundedPin {
-    def apply(origin: org.apache.spark.sql.SparkSession, partitions: Int = 4)(
-        body: org.apache.spark.sql.SparkSession => DataFrame): DataFrame = {
-      val clone = origin.newSession()
-      Checkpoints.propagate(origin, clone)
-      clone.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      val out = body(clone)
-      origin.createDataFrame(out.rdd, out.schema)
-    }
-
-    /** Ferry a (small, origin-planned) frame into the pin session with
-      * its lineage cut: the slice derivation runs ONCE at the caller's
-      * full scan parallelism; everything downstream plans in the
-      * clone. The ferried RDD is coalesced to the pin parallelism —
-      * a bounded slice left at scan partitioning would otherwise leak
-      * core-count-scaled task counts into every downstream stage (a
-      * ferried frame also loses size statistics, so an inequality
-      * self-join over it plans as a CartesianProduct whose task count
-      * is the PRODUCT of the input partition counts). */
-    def ferry(clone: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame = {
-      val par = clone.conf.get("spark.sql.shuffle.partitions").toInt
-      Checkpoints.cut(clone.createDataFrame(df.rdd.coalesce(par), df.schema))
-    }
-  }
-
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
     if (reliable(df)) {
       val s = df.sparkSession

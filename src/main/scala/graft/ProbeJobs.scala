@@ -1,14 +1,14 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev tool: run named queries and attribute wall time to Spark jobs
   * vs driver-side gaps (planning, collects, driver loops). For each
   * query prints total wall, per-job (start-offset, duration,
-  * description) and the summed job time vs the un-jobbed remainder —
-  * the quick answer to "is this query slow because of many small
-  * round-barrier jobs or because of driver work between them".
+  * description) and the job time (the union of the job intervals)
+  * vs the un-jobbed remainder — the quick answer to "is this query
+  * slow because of many small round-barrier jobs or because of
+  * driver work between them".
   *
   * Usage: sbt "runMain graft.ProbeJobs q_kcore q_pagerank"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
@@ -20,18 +20,7 @@ object ProbeJobs {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("GRAFT_PROBE_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      // application-sized codegen class cache — see Bench.scala's note
-      // (env-tunable here so the dev tool can A/B the value)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     case class J(id: Int, start: Long, var end: Long, desc: String, var stages: Int)
     val jobs = mutable.ArrayBuffer.empty[J]
@@ -59,11 +48,22 @@ object ProbeJobs {
         val t1 = System.currentTimeMillis()
         // drain the async listener bus deterministically — a fixed
         // sleep dropped late job-end events on a loaded bus (ADVICE
-        // r17), understating jobMs, the exact signal measured here
-        org.apache.spark.GraftListenerBridge
+        // r17), understating jobMs, the exact signal measured here. A
+        // bus still busy after 10 s leaves the report on the events
+        // seen so far rather than losing the whole probe.
+        try org.apache.spark.GraftListenerBridge
           .waitUntilListenerBusEmpty(spark.sparkContext, 10000)
+        catch { case _: java.util.concurrent.TimeoutException =>
+          System.err.println(s"[probe-jobs] $n: listener bus not drained in 10 s; partial job list")
+        }
         val snapshot = jobs.synchronized { jobs.toVector }.filter(_.end > 0)
-        val jobMs = snapshot.map(j => j.end - j.start).sum
+        // union of the job intervals: concurrent jobs (AQE stage
+        // jobs, broadcast builds) overlap, and summing them would
+        // bill the same wall time twice and drive gapMs negative
+        val jobMs = snapshot.sortBy(_.start).foldLeft((0L, Long.MinValue)) {
+          case ((sum, reach), j) =>
+            (sum + math.max(0L, j.end - math.max(j.start, reach)), math.max(reach, j.end))
+        }._1
         val sb = new StringBuilder
         sb.append(f"== $n pass$pass wall=${(t1 - t0) / 1000.0}%.2fs build+plan=${(planned - t0) / 1000.0}%.2fs jobs=${snapshot.size} jobMs=${jobMs / 1000.0}%.2fs gapMs=${(t1 - t0 - jobMs) / 1000.0}%.2fs\n")
         snapshot.sortBy(_.start).foreach { j =>

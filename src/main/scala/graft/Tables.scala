@@ -90,10 +90,14 @@ object Tables {
     // RECURSIVE walk: a partitioned layout (key=value/ subdirs)
     // changes neither the parent's entry names nor reliably its
     // mtime when a leaf file is rewritten, so the fingerprint
-    // must list the leaves (ADVICE r17)
+    // must list the leaves (ADVICE r17). Each directory is entered
+    // once by canonical path, so a symlink cycle ends the walk
+    // instead of recursing without bound.
     val sb = new StringBuilder
+    val seen = scala.collection.mutable.Set.empty[String]
     def walk(f: java.io.File): Boolean = {
       if (f.isDirectory) {
+        if (!seen.add(f.getCanonicalPath)) return true
         val kids = Option(f.listFiles()).getOrElse(return false)
         kids.sortBy(_.getName).forall(walk)
       } else {

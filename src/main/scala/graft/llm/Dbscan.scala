@@ -763,11 +763,11 @@ object Dbscan {
         .crossJoin(broadcast(proto))
       val corpus0 = slice.unionByName(plants0)
       // bounded pin (≤212 vectors by the vec_id<200 literal):
-      // slice-sized parallelism — see [[graft.Checkpoints.BoundedPin]]
-      graft.Checkpoints.BoundedPin(s) { clone =>
+      // slice-sized parallelism — see [[graft.Scoped.pin]]
+      graft.Scoped.pin(s) { scope =>
       // the ferry's lineage cut already materializes the corpus —
       // the previous explicit persist is subsumed
-      val corpus = graft.Checkpoints.BoundedPin.ferry(clone, corpus0)
+      val corpus = scope.ferry(corpus0)
       val pairs = corpus.as("a").join(corpus.as("b"),
           col("a.vec_id") < col("b.vec_id"))
         .filter(graft.llm.Similarity.cosine(col("a.v"), col("b.v")) >= 0.95)

@@ -658,21 +658,15 @@ object Dedup {
     // rounds are pure task-scheduling overhead (~40% of the query's
     // wall-clock). One partition per 64k vertices, floor 4 — the
     // same rule yields thousands of partitions at billion-vertex
-    // scale, where it matters. The override lives in a CLONED session
-    // (same SparkContext, private SQLConf) so concurrent queries on
-    // the caller's session never plan under the wrong parallelism;
-    // the iterated frames are rebound into the clone via their RDDs
-    // (already materialized — every round localCheckpoints anyway)
-    // and the result is rebound to the caller's session on the way
-    // out.
+    // scale, where it matters. The override lives in a [[graft.Scoped]]
+    // clone so concurrent queries on the caller's session never plan
+    // under the wrong parallelism; the iterated frames are rebound
+    // into the clone (already materialized — every round
+    // localCheckpoints anyway) and the result is rebound to the
+    // caller's session on the way out.
     val origin = edges.sparkSession
     val nV = vertices.count()
-    val iterPar = math.max(4L, nV / 65536L).toString
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    spark.conf.set("spark.sql.shuffle.partitions", iterPar)
-    def rebind(s: SparkSession, df: DataFrame): DataFrame =
-      s.createDataFrame(df.rdd, df.schema)
+    val scope = graft.Scoped(origin, graft.Scoped.vertexWidth(nV))
     // materialize the (possibly expensive) edge derivation ONCE —
     // every round joins this frame, and without the checkpoint each
     // round would recompute the whole upstream edge plan (the
@@ -681,7 +675,7 @@ object Dedup {
     // reliable checkpoint() under graft.checkpoint.reliable (cluster
     // mode — survives executor loss mid-iteration)
     val und = graft.Checkpoints.cut(
-      rebind(spark, edges.select(col("src"), col("dst"))
+      scope.in(edges.select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))))
     // TINY-GRAPH FAST PATH — the broadcast-join analog for CC: when
     // the (already materialized) doubled edge list and the vertex set
@@ -701,7 +695,7 @@ object Dedup {
     val localCap = origin.conf.get("spark.graft.cc.localCap", "65536").toLong
     val nE2 = und.count()
     if (nV <= localCap && nE2 <= 2 * localCap) {
-      val vs = rebind(spark, vertices.select(col("id"))).collect()
+      val vs = scope.in(vertices.select(col("id"))).collect()
         .map(_.getLong(0))
       val idx = scala.collection.mutable.LongMap.empty[Int]
       vs.zipWithIndex.foreach { case (v, i) => idx(v) = i }
@@ -739,7 +733,7 @@ object Dedup {
       return origin.createDataFrame(
         origin.sparkContext.parallelize(rows, 1), schema)
     }
-    var labels = graft.Checkpoints.cut(rebind(spark, vertices.select(col("id")))
+    var labels = graft.Checkpoints.cut(scope.in(vertices.select(col("id")))
       .select(col("id"), col("id").as("label")))
     // convergence via the monotone invariant: labels only ever
     // decrease, so the propagation has fixpointed iff Σlabels is
@@ -777,7 +771,7 @@ object Dedup {
     }
     var prevSum = Long.MinValue
     var curSum = labelSum(labels) match {
-      case None => return rebind(origin, labels)
+      case None => return scope.out(labels)
       case Some(x) => x
     }
     var i = 0
@@ -788,7 +782,7 @@ object Dedup {
       curSum = labelSum(labels).get // non-empty here: checked above
       i += 1
     }
-    rebind(origin, labels)
+    scope.out(labels)
   }
 
   /** (doc_id, distinct-word-set) projection shared by the clustering
@@ -1607,9 +1601,9 @@ object Dedup {
             concat(col("text"), lit(" graftplantnovel")).as("text")))
       // bounded pin (≤310 docs by the doc_id<300 literal): the
       // signature/band/verify pipeline runs under slice-sized
-      // parallelism — see [[graft.Checkpoints.BoundedPin]]
-      graft.Checkpoints.BoundedPin(s) { clone =>
-      val base = graft.Checkpoints.BoundedPin.ferry(clone, base0)
+      // parallelism — see [[graft.Scoped.pin]]
+      graft.Scoped.pin(s) { scope =>
+      val base = scope.ferry(base0)
       val byDoc = Window.partitionBy("doc_id").orderBy("gpos")
       val toks = base.filter(trim(col("text")) =!= "")
         .select(col("doc_id"),
@@ -1753,9 +1747,9 @@ object Dedup {
         slice.filter(col("doc_id") < 10)
           .select((col("doc_id") + lit(offset)).as("doc_id"), col("text")))
       // bounded pin (≤310 docs): slice-sized parallelism — see
-      // [[graft.Checkpoints.BoundedPin]]
-      graft.Checkpoints.BoundedPin(s) { clone =>
-      val base = graft.Checkpoints.BoundedPin.ferry(clone, base0)
+      // [[graft.Scoped.pin]]
+      graft.Scoped.pin(s) { scope =>
+      val base = scope.ferry(base0)
       val toks = base.filter(trim(col("text")) =!= "")
         .select(col("doc_id"),
           explode(split(trim(col("text")), "\\s+")).as("tok"))

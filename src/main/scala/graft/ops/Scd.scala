@@ -290,9 +290,11 @@ object Scd {
     * output files, while the rebuild this replaces re-shuffles every
     * version ever recorded. Preconditions checked, not assumed: the
     * delta carries at most ONE version per (key, valid_from) cell and
-    * strictly advances tx within its cell (counted in-plan; throws). */
+    * strictly advances tx within its cell (counted in-plan; throws).
+    * The two batch-sized persists are tracked in `handles`; the caller
+    * releases them once the returned plan is materialized. */
   def absorbCorrections(store: DataFrame, delta: DataFrame,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
+      handles: graft.CacheHandles): DataFrame = {
     // the delta is BATCH-sized and consumed five times (dup check,
     // touch join, reclose, anti-join key set, append); the touched
     // set is batch-sized too and consumed twice (stale check,

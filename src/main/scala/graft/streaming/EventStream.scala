@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.{Q, Tables}
 
 /** Structured Streaming surface of the engine.
@@ -24,24 +24,30 @@ import graft.{Q, Tables}
   */
 object EventStream {
 
-  /** A cloned session (same SparkContext, private SQLConf) with a
-    * narrowed state-partition count for one streaming run. Stateful
-    * operators fix their state-store partition count from
-    * `spark.sql.shuffle.partitions` at query START, and every store
-    * partition pays a snapshot/commit per micro-batch — at the
-    * harness's stream volumes the 32-partition default is pure
-    * bookkeeping (measured 2-4× of some queries' wall-clock). On a
-    * real deployment this is the knob sized to stream volume,
-    * independently of the batch default. Scoping it to a clone keeps
-    * the caller's session conf untouched (concurrent queries keep
-    * their parallelism) and gives each run its own
+  /** One streaming run: `plan` builds the streaming frame from a
+    * [[graft.Scoped]] clone narrowed to 4 shuffle partitions, and it
+    * runs under AvailableNow into the memory sink `sink`. Returns the
+    * sink table (bound to the clone) and the finished query, whose
+    * `recentProgress` the multi-batch proofs read.
+    *
+    * Why a narrowed clone: stateful operators fix their state-store
+    * partition count from `spark.sql.shuffle.partitions` at query
+    * START, and every store partition pays a snapshot/commit per
+    * micro-batch — at the harness's stream volumes the 32-partition
+    * default is pure bookkeeping (measured 2-4× of some queries'
+    * wall-clock). On a real deployment this is the knob sized to
+    * stream volume, independently of the batch default. Scoping it to
+    * a clone keeps the caller's session conf untouched (concurrent
+    * queries keep their parallelism) and gives each run its own
     * StreamingQueryManager + catalog, so memory-sink names can't
     * collide across overlapping runs. */
-  private def narrowedSession(s: org.apache.spark.sql.SparkSession,
-      n: Int): org.apache.spark.sql.SparkSession = {
-    val local = s.newSession()
-    local.conf.set("spark.sql.shuffle.partitions", n.toString)
-    local
+  private[graft] def drain(s: SparkSession, sink: String, mode: OutputMode)(
+      plan: SparkSession => DataFrame): (DataFrame, StreamingQuery) = {
+    val local = graft.Scoped(s, 4).session
+    val sq = plan(local).writeStream.format("memory").queryName(sink)
+      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+    sq.awaitTermination()
+    (local.table(sink), sq)
   }
 
   /** Per-application staging dir for a streaming source: the file
@@ -129,16 +135,11 @@ object EventStream {
         .select("ts", "event_type", "value")
       val stage = stagePath(s, "graft_stream_events")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_window"
-      val sq = hourlyCounts(stream)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("window_start", "event_type")
+      val (sink, _) = drain(s, "graft_stream_window", OutputMode.Complete) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+        hourlyCounts(stream)
+      }
+      sink.orderBy("window_start", "event_type")
     },
     Some("""
       SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -168,16 +169,11 @@ object EventStream {
         .select("event_id", "ts", "event_type")
       val stage = stagePath(s, "graft_stream_dedup")
       ev.unionAll(ev).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_dedup_sink"
-      val sq = dedupEvents(stream)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
+      val (sink, _) = drain(s, "graft_stream_dedup_sink", OutputMode.Append) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+        dedupEvents(stream)
+      }
+      sink
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
           countDistinct(col("event_id")).as("n_ids"))
@@ -208,22 +204,17 @@ object EventStream {
       val ev = Tables.load(s, dir, "events").select("ts", "user_id")
       val stage = stagePath(s, "graft_stream_sessions")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_sessions_sink"
-      val sq = stream
-        .withWatermark("ts", "2 hours")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("user_id"), col("n_events"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("user_id", "session_start")
+      val (sink, _) = drain(s, "graft_stream_sessions_sink", OutputMode.Complete) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+        stream
+          .withWatermark("ts", "2 hours")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("session_window.start").as("session_start"),
+            col("session_window.end").as("session_end"),
+            col("user_id"), col("n_events"))
+      }
+      sink.orderBy("user_id", "session_start")
     },
     Some("""
       SELECT min(ts) AS session_start,
@@ -266,33 +257,28 @@ object EventStream {
         .select("event_id", "ts", "user_id", "event_type")
       val stage = stagePath(s, "graft_stream_join")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      def src() = local.readStream.schema(ev.schema).parquet(stage)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-      val sink = "graft_stream_join_sink"
-      // A stream-stream join keeps FOUR state stores per shuffle
-      // partition (keyToNumValues + keyWithIndexToValue per side) —
-      // the heaviest case of the [[narrowedSession]] rationale
-      // (~9s of pure store-commit bookkeeping measured at 32).
-      val sq = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("click_id"), col("purchase_id"), col("user_id"),
-          col("click_ts"), col("purchase_ts"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("click_id", "purchase_id")
+      val (sink, _) = drain(s, "graft_stream_join_sink", OutputMode.Append) { local =>
+        def src() = local.readStream.schema(ev.schema).parquet(stage)
+        val clicks = src().filter(col("event_type") === "click")
+          .select(col("event_id").as("click_id"), col("user_id"),
+            col("ts").as("click_ts"))
+          .withWatermark("click_ts", "2 hours")
+        val purchases = src().filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+            col("ts").as("purchase_ts"))
+          .withWatermark("purchase_ts", "2 hours")
+        // A stream-stream join keeps FOUR state stores per shuffle
+        // partition (keyToNumValues + keyWithIndexToValue per side) —
+        // the heaviest case of the [[drain]] narrowing rationale
+        // (~9s of pure store-commit bookkeeping measured at 32).
+        clicks.join(purchases,
+            col("user_id") === col("p_user") &&
+              col("purchase_ts") >= col("click_ts") &&
+              col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
+          .select(col("click_id"), col("purchase_id"), col("user_id"),
+            col("click_ts"), col("purchase_ts"))
+      }
+      sink.orderBy("click_id", "purchase_id")
     },
     Some("""
       SELECT a.event_id AS click_id, b.event_id AS purchase_id,
@@ -325,30 +311,25 @@ object EventStream {
         .select("event_id", "ts", "user_id", "event_type")
       val stage = stagePath(s, "graft_stream_join_outer")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      def src() = local.readStream.schema(ev.schema).parquet(stage)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-      val sink = "graft_stream_join_outer_sink"
-      val sq = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-          "left_outer")
-        .select(col("click_id"), col("purchase_id"), col("user_id"),
-          col("click_ts"), col("purchase_ts"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy(col("click_id"),
+      val (sink, _) = drain(s, "graft_stream_join_outer_sink", OutputMode.Append) { local =>
+        def src() = local.readStream.schema(ev.schema).parquet(stage)
+        val clicks = src().filter(col("event_type") === "click")
+          .select(col("event_id").as("click_id"), col("user_id"),
+            col("ts").as("click_ts"))
+          .withWatermark("click_ts", "2 hours")
+        val purchases = src().filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+            col("ts").as("purchase_ts"))
+          .withWatermark("purchase_ts", "2 hours")
+        clicks.join(purchases,
+            col("user_id") === col("p_user") &&
+              col("purchase_ts") >= col("click_ts") &&
+              col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+            "left_outer")
+          .select(col("click_id"), col("purchase_id"), col("user_id"),
+            col("click_ts"), col("purchase_ts"))
+      }
+      sink.orderBy(col("click_id"),
         asc_nulls_first("purchase_id"))
     },
     Some("""
@@ -395,31 +376,26 @@ object EventStream {
         .select("event_id", "ts", "user_id", "event_type")
       val stage = stagePath(s, "graft_stream_join_full")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      def src() = local.readStream.schema(ev.schema).parquet(stage)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-      val sink = "graft_stream_join_full_sink"
-      val sq = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-          "full_outer")
-        .select(col("click_id"), col("purchase_id"),
-          coalesce(col("user_id"), col("p_user")).as("user_id"),
-          col("click_ts"), col("purchase_ts"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy(asc_nulls_last("click_id"),
+      val (sink, _) = drain(s, "graft_stream_join_full_sink", OutputMode.Append) { local =>
+        def src() = local.readStream.schema(ev.schema).parquet(stage)
+        val clicks = src().filter(col("event_type") === "click")
+          .select(col("event_id").as("click_id"), col("user_id"),
+            col("ts").as("click_ts"))
+          .withWatermark("click_ts", "2 hours")
+        val purchases = src().filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+            col("ts").as("purchase_ts"))
+          .withWatermark("purchase_ts", "2 hours")
+        clicks.join(purchases,
+            col("user_id") === col("p_user") &&
+              col("purchase_ts") >= col("click_ts") &&
+              col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+            "full_outer")
+          .select(col("click_id"), col("purchase_id"),
+            coalesce(col("user_id"), col("p_user")).as("user_id"),
+            col("click_ts"), col("purchase_ts"))
+      }
+      sink.orderBy(asc_nulls_last("click_id"),
         asc_nulls_first("purchase_id"))
     },
     Some("""
@@ -485,29 +461,24 @@ object EventStream {
       o.coalesce(1).write.mode("overwrite").text(s"$stageDir/jsonl")
       val part = new java.io.File(s"$stageDir/jsonl").listFiles()
         .filter(_.getName.startsWith("part-")).head
-      val local = narrowedSession(s, 4)
-      // no .schema(): the source declares the explicit SAM schema
-      // itself (a user-supplied one would need supportsExternalMetadata)
-      val stream = local.readStream.format("graft.sources.PagedJsonSource")
-        .option("path", part.toString)
-        .option("page_size", 2000)
-        // ~¼ of the backlog per batch at ANY corpus scale (an 8 KiB
-        // floor keeps partitions sane; sf0.001's file is ~120 KiB, so
-        // a larger floor would collapse the multi-batch proof there)
-        .option("stream_batch_bytes", math.max(8L * 1024, part.length() / 4))
-        .load()
-      val sink = "graft_stream_pager_sink"
-      val sq = stream.groupBy(col("naicsCode").as("status"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      val (sink, sq) = drain(s, "graft_stream_pager_sink", OutputMode.Complete) { local =>
+        // no .schema(): the source declares the explicit SAM schema
+        // itself (a user-supplied one would need supportsExternalMetadata)
+        val stream = local.readStream.format("graft.sources.PagedJsonSource")
+          .option("path", part.toString)
+          .option("page_size", 2000)
+          // ~¼ of the backlog per batch at ANY corpus scale (an 8 KiB
+          // floor keeps partitions sane; sf0.001's file is ~120 KiB, so
+          // a larger floor would collapse the multi-batch proof there)
+          .option("stream_batch_bytes", math.max(8L * 1024, part.length() / 4))
+          .load()
+        stream.groupBy(col("naicsCode").as("status"))
+          .agg(count(lit(1)).as("n"))
+      }
       val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
       require(dataBatches >= 3,
         s"admission control must split the backlog into micro-batches, got $dataBatches")
-      local.table(sink).orderBy("status")
+      sink.orderBy("status")
     },
     Some("""
       SELECT o_orderstatus AS status, CAST(count(*) AS BIGINT) AS n
@@ -585,19 +556,14 @@ object EventStream {
       val ev = Tables.load(s, dir, "events").select("user_id", "ts")
       val stage = stagePath(s, "graft_stream_tmo_sessions")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .withWatermark("ts", "2 hours")
-        .as[(Long, java.sql.Timestamp)]
-      val sink = "graft_stream_tmo_sessions_sink"
-      val sq = timeoutSessions(stream, gapUs = 1800L * 1000000L)
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("user_id", "session_start")
+      val (sink, _) = drain(s, "graft_stream_tmo_sessions_sink", OutputMode.Append) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+          .withWatermark("ts", "2 hours")
+          .as[(Long, java.sql.Timestamp)]
+        timeoutSessions(stream, gapUs = 1800L * 1000000L)
+          .toDF()
+      }
+      sink.orderBy("user_id", "session_start")
     },
     Some("""
       WITH m AS (
@@ -644,18 +610,13 @@ object EventStream {
       val ev = Tables.load(s, dir, "events").select("user_id", "ts")
       val stage = stagePath(s, "graft_stream_state")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .as[(Long, java.sql.Timestamp)]
-      val sink = "graft_stream_state_sink"
-      val sq = runningUserCounts(stream)
-        .toDF("user_id", "events_so_far")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
+      val (sink, _) = drain(s, "graft_stream_state_sink", OutputMode.Update) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+          .as[(Long, java.sql.Timestamp)]
+        runningUserCounts(stream)
+          .toDF("user_id", "events_so_far")
+      }
+      sink
         .groupBy("user_id")
         .agg(max(col("events_so_far")).as("n_events"))
         .orderBy("user_id")
@@ -743,18 +704,13 @@ object EventStream {
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
       val stage = stagePath(s, "graft_stream_funnel")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .as[(Long, String, Long)]
-      val sink = "graft_stream_funnel_sink"
-      val sq = funnelStates(stream)
-        .toDF("user_id", "n_seen", "has_v", "has_c", "has_p", "secs")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
+      val (sink, _) = drain(s, "graft_stream_funnel_sink", OutputMode.Update) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+          .as[(Long, String, Long)]
+        funnelStates(stream)
+          .toDF("user_id", "n_seen", "has_v", "has_c", "has_p", "secs")
+      }
+      sink
         .groupBy("user_id")
         .agg(max_by(struct(col("has_v"), col("has_c"), col("has_p"), col("secs")),
           col("n_seen")).as("last"))
@@ -801,7 +757,7 @@ object EventStream {
       val fs = stageP.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(stageP))
         ev.repartition(8).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Scoped(s, 4).session
       val writeBatch: (DataFrame, Long) => Unit =
         (batch, id) => batch.write.mode("overwrite").parquet(s"$target/batch=$id")
       def run(): Unit = {
@@ -859,22 +815,17 @@ object EventStream {
       s.range(25)
         .select(concat(lit("{corrupt json line #"), col("id")).as("value"))
         .write.mode("append").text(stage)
-      val local = narrowedSession(s, 4)
-      val sink = "graft_stream_quarantine_sink"
-      val sq = local.readStream
-        .schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE, _corrupt_record STRING")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(stage)
-        .groupBy(col("c_mktsegment").as("segment"))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("_corrupt_record")).as("n_corrupt"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy(asc_nulls_first("segment"))
+      val (sink, _) = drain(s, "graft_stream_quarantine_sink", OutputMode.Complete) { local =>
+        local.readStream
+          .schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE, _corrupt_record STRING")
+          .option("mode", "PERMISSIVE")
+          .option("columnNameOfCorruptRecord", "_corrupt_record")
+          .json(stage)
+          .groupBy(col("c_mktsegment").as("segment"))
+          .agg(count(lit(1)).as("n_rows"),
+            count(col("_corrupt_record")).as("n_corrupt"))
+      }
+      sink.orderBy(asc_nulls_first("segment"))
     },
     graft.ops.Ingest.badRecords.oracle)
 
@@ -899,17 +850,12 @@ object EventStream {
           col("event_type"), col("value"))
       val stage = stagePath(s, "graft_stream_ntz")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val sink = "graft_stream_ntz_window"
-      val sq = hourlyCounts(stream)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("window_start", "event_type")
+      val (sink, _) = drain(s, "graft_stream_ntz_window", OutputMode.Complete) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+          .withColumn("ts", col("ts").cast("timestamp"))
+        hourlyCounts(stream)
+      }
+      sink.orderBy("window_start", "event_type")
     },
     streamWindow.oracle)
 
@@ -934,21 +880,16 @@ object EventStream {
         .select("ts", "event_type", "value")
       val stage = stagePath(s, "graft_stream_enrich_ev")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val dim = local.createDataFrame(
-        ev.select(col("event_type")).distinct()
-          .collect().map(r => r.getString(0))
-          .sorted.map(t => (t, t.length.toLong)).toSeq)
-        .toDF("event_type", "weight")
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_enrich"
-      val sq = enrichWithDim(stream, dim, "event_type")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
+      val (sink, _) = drain(s, "graft_stream_enrich", OutputMode.Append) { local =>
+        val dim = local.createDataFrame(
+          ev.select(col("event_type")).distinct()
+            .collect().map(r => r.getString(0))
+            .sorted.map(t => (t, t.length.toLong)).toSeq)
+          .toDF("event_type", "weight")
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+        enrichWithDim(stream, dim, "event_type")
+      }
+      sink
         .groupBy("event_type")
         .agg(max(col("weight")).as("weight"), count(lit(1)).as("cnt"),
           sum(round(col("value") * 100, 0).cast("long") * col("weight"))
@@ -1028,35 +969,30 @@ object EventStream {
       stageOne(ev.filter(!isLate).select("ts", "event_type", "cents"), "b1_ontime", 1000000L)
       stageOne(ev.filter(isLate).select("ts", "event_type", "cents"), "b2_straggler", 2000000L)
       stageOne(horizon.select("ts", "event_type", "cents"), "b3_horizon", 3000000L)
-      val local = narrowedSession(s, 4)
-      val sink = "graft_stream_late_sink"
-      val schema = "ts TIMESTAMP, event_type STRING, cents BIGINT"
-      val sq = local.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .withWatermark("ts", "0 seconds")
-        .as[(java.sql.Timestamp, String, Long)]
-        .groupByKey(_._2)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (typ: String, batch: Iterator[(java.sql.Timestamp, String, Long)],
-           gs: GroupState[(Long, Long, Long)]) =>
-            val wm = gs.getCurrentWatermarkMs()
-            var (onTime, late, cents) = gs.getOption.getOrElse((0L, 0L, 0L))
-            batch.foreach { case (ts, _, c) =>
-              if (ts.getTime < wm) late += 1 // quarantined, never counted
-              else { onTime += 1; cents += c }
-            }
-            gs.update((onTime, late, cents))
-            (typ, onTime, late, cents)
-        }
-        .toDF("event_type", "n_ontime", "n_late_dropped", "cents_ontime")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      val (sink, _) = drain(s, "graft_stream_late_sink", OutputMode.Update) { local =>
+        val schema = "ts TIMESTAMP, event_type STRING, cents BIGINT"
+        local.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+          .withWatermark("ts", "0 seconds")
+          .as[(java.sql.Timestamp, String, Long)]
+          .groupByKey(_._2)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (typ: String, batch: Iterator[(java.sql.Timestamp, String, Long)],
+             gs: GroupState[(Long, Long, Long)]) =>
+              val wm = gs.getCurrentWatermarkMs()
+              var (onTime, late, cents) = gs.getOption.getOrElse((0L, 0L, 0L))
+              batch.foreach { case (ts, _, c) =>
+                if (ts.getTime < wm) late += 1 // quarantined, never counted
+                else { onTime += 1; cents += c }
+              }
+              gs.update((onTime, late, cents))
+              (typ, onTime, late, cents)
+          }
+          .toDF("event_type", "n_ontime", "n_late_dropped", "cents_ontime")
+      }
       // per-batch snapshots collapse to the latest: total row counter
       // is strictly monotone per key
-      local.table(sink)
+      sink
         .filter(col("event_type") =!= "zz_horizon")
         .groupBy("event_type")
         .agg(max_by(
@@ -1128,30 +1064,25 @@ object EventStream {
         lit(hotUser).as("user_id"))
       val stage = stagePath(s, "graft_stream_hh")
       ev.unionByName(hot).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val sink = "graft_stream_hh_sink"
       val k = 64
-      val sq = local.readStream.schema(ev.schema).parquet(stage)
-        .as[(Long, java.sql.Timestamp, Long)]
-        .groupByKey(r => java.lang.Math.floorMod(r._3, 32L))
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (shard: Long, batch: Iterator[(Long, java.sql.Timestamp, Long)],
-           gs: GroupState[(Map[Long, Long], Long)]) =>
-            var (m, np) = gs.getOption.getOrElse((Map.empty[Long, Long], 0L))
-            batch.toSeq.sortBy(r => (r._2.getTime, r._1)).foreach { r =>
-              m = mgAdd(m, r._3, k); np += 1L
-            }
-            gs.update((m, np))
-            val users = m.keys.toSeq.sorted
-            (shard, np, users, users.map(m))
-        }
-        .toDF("shard", "n_proc", "users", "ests")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val latest = local.table(sink)
+      val (sink, _) = drain(s, "graft_stream_hh_sink", OutputMode.Update) { local =>
+        local.readStream.schema(ev.schema).parquet(stage)
+          .as[(Long, java.sql.Timestamp, Long)]
+          .groupByKey(r => java.lang.Math.floorMod(r._3, 32L))
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (shard: Long, batch: Iterator[(Long, java.sql.Timestamp, Long)],
+             gs: GroupState[(Map[Long, Long], Long)]) =>
+              var (m, np) = gs.getOption.getOrElse((Map.empty[Long, Long], 0L))
+              batch.toSeq.sortBy(r => (r._2.getTime, r._1)).foreach { r =>
+                m = mgAdd(m, r._3, k); np += 1L
+              }
+              gs.update((m, np))
+              val users = m.keys.toSeq.sorted
+              (shard, np, users, users.map(m))
+          }
+          .toDF("shard", "n_proc", "users", "ests")
+      }
+      val latest = sink
         .groupBy("shard")
         .agg(max_by(struct(col("n_proc"), col("users"), col("ests")), col("n_proc"))
           .as("z"))
@@ -1205,24 +1136,19 @@ object EventStream {
       // 4 files + maxFilesPerTrigger(1): the digest state MUST absorb
       // several micro-batches, not swallow the backlog in one
       ev.repartition(4).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val sink = "graft_stream_quantile"
-      val sq = stream.groupBy("event_type")
-        .agg(graft.functions.QDigestAgg.build(col("cents"), bits, k).as("d"),
-          count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      val (sink, sq) = drain(s, "graft_stream_quantile", OutputMode.Complete) { local =>
+        val stream = local.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+        stream.groupBy("event_type")
+          .agg(graft.functions.QDigestAgg.build(col("cents"), bits, k).as("d"),
+            count(lit(1)).as("n"))
+      }
       val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
       require(dataBatches >= 3,
         s"streaming-quantile replay degenerated to $dataBatches data micro-batches")
       // |types| sketch rows leave the stream; everything below is
       // driver math on sketch bytes + one exact batch pass
-      val sketches = local.table(sink).collect().map { r =>
+      val sketches = sink.collect().map { r =>
         val entries = r.getSeq[org.apache.spark.sql.Row](1)
           .map(e => (e.getLong(0), e.getLong(1)))
         (r.getString(0), entries, r.getLong(2))
@@ -1399,23 +1325,18 @@ object EventStream {
       }
       sentinel("z1_flush", 4, System.currentTimeMillis() + 3600000L)
       sentinel("z2_flush", 5, System.currentTimeMillis() + 7200000L)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .withWatermark("ts", "2 hours")
-        .as[(Long, java.sql.Timestamp, String, Long, Double)]
-      val sink = "graft_stream_asof_sink"
-      val sq = asofStream(stream)
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      val (sink, sq) = drain(s, "graft_stream_asof_sink", OutputMode.Append) { local =>
+        val stream = local.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+          .withWatermark("ts", "2 hours")
+          .as[(Long, java.sql.Timestamp, String, Long, Double)]
+        asofStream(stream)
+          .toDF()
+      }
       val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
       require(dataBatches >= 4,
         s"stream-asof replay degenerated to $dataBatches data micro-batches")
-      local.table(sink).orderBy("purchase_id")
+      sink.orderBy("purchase_id")
     },
     Some("""
       SELECT p.event_id AS purchase_id, p.user_id, c.value AS last_click_value
@@ -1462,30 +1383,25 @@ object EventStream {
         .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
       val stage = stagePath(s, "graft_stream_kcore")
       edges.repartition(3).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      import local.implicits._
-      val stream = local.readStream.schema(edges.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val touches = stream
-        .select(explode(array(col("u"), col("v"))).as("vertex")).as[Long]
-      val sink = "graft_stream_kcore_sink"
-      val sq = touches.groupByKey(identity)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (v: Long, batch: Iterator[Long], st: GroupState[Long]) =>
-            val d = st.getOption.getOrElse(0L) + batch.size
-            st.update(d)
-            (v, d)
-        }
-        .toDF("vertex", "deg_so_far")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val degs = local.table(sink).groupBy("vertex")
+      val (sink, _) = drain(s, "graft_stream_kcore_sink", OutputMode.Update) { local =>
+        import local.implicits._
+        val stream = local.readStream.schema(edges.schema)
+          .option("maxFilesPerTrigger", 1).parquet(stage)
+        val touches = stream
+          .select(explode(array(col("u"), col("v"))).as("vertex")).as[Long]
+        touches.groupByKey(identity)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (v: Long, batch: Iterator[Long], st: GroupState[Long]) =>
+              val d = st.getOption.getOrElse(0L) + batch.size
+              st.update(d)
+              (v, d)
+          }
+          .toDF("vertex", "deg_so_far")
+      }
+      val degs = sink.groupBy("vertex")
         .agg(max(col("deg_so_far")).as("degree"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val staged = local.read.parquet(stage)
+      val staged = sink.sparkSession.read.parquet(stage)
       val batchDeg = staged
         .select(explode(array(col("u"), col("v"))).as("vertex"))
         .groupBy("vertex").agg(count(lit(1)).as("bd"))
@@ -1537,21 +1453,16 @@ object EventStream {
         .filter(col("user_id").isNotNull).select(col("user_id"))
       val stage = stagePath(s, "graft_stream_cms")
       ev.repartition(4).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val sink = "graft_stream_cms_sink"
-      val sq = stream
-        .agg(graft.functions.CountMinAgg.build(col("user_id")).as("sk"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      val (sink, sq) = drain(s, "graft_stream_cms_sink", OutputMode.Complete) { local =>
+        val stream = local.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+        stream
+          .agg(graft.functions.CountMinAgg.build(col("user_id")).as("sk"))
+      }
       val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
       require(dataBatches >= 3,
         s"streaming-CMS replay degenerated to $dataBatches data micro-batches")
-      val cells = local.table(sink).head().getSeq[Long](0).toIndexedSeq
+      val cells = sink.head().getSeq[Long](0).toIndexedSeq
       val top = ev.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
         .orderBy(desc("exact_cnt"), col("user_id"))
         .limit(10).collect()
@@ -1643,21 +1554,16 @@ object EventStream {
         (col("o_orderkey") % 7 === 0).as("del"))
       val stage = stagePath(s, "graft_stream_cdc")
       log.repartition(3).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
-      val stream = local.readStream.schema(log.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .as[(Long, Long, Long, Boolean)]
-      val sink = "graft_stream_cdc_sink"
-      val sq = cdcStates(stream)
-        .toDF("key", "last_seq", "value_cents", "del", "n_seen")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      val (sink, _) = drain(s, "graft_stream_cdc_sink", OutputMode.Update) { local =>
+        val stream = local.readStream.schema(log.schema)
+          .option("maxFilesPerTrigger", 1).parquet(stage)
+          .as[(Long, Long, Long, Boolean)]
+        cdcStates(stream)
+          .toDF("key", "last_seq", "value_cents", "del", "n_seen")
+      }
       // the winning seq only grows across emissions, so the final
       // materialization is each key's max_by(·, n_seen) snapshot
-      local.table(sink)
+      sink
         .groupBy("key")
         .agg(expr("max_by(last_seq, n_seen)").as("last_seq"),
           expr("max_by(value_cents, n_seen)").as("value_cents"),

@@ -75,25 +75,4 @@ class CheckpointSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(Graph.pageRank(empty, 5).count() === 0)
   }
-
-  test("propagate carries checkpoint AND staging conf into a cloned session") {
-    spark.conf.set(Checkpoints.ReliableKey, "true")
-    spark.conf.set(Checkpoints.DirKey, "/tmp/graft_ckpt_probe")
-    spark.conf.set("spark.graft.staging.dir", "/tmp/graft_stage_probe")
-    try {
-      val clone = spark.newSession()
-      Checkpoints.propagate(spark, clone)
-      assert(clone.conf.get(Checkpoints.ReliableKey) === "true")
-      assert(clone.conf.get(Checkpoints.DirKey) === "/tmp/graft_ckpt_probe")
-      // the staging override must ride along: the clone's checkpoint
-      // fallback and any staged store it touches resolve against the
-      // CLONE's conf (review finding, r17)
-      assert(Staging.dir(clone, "probe")
-        .startsWith("/tmp/graft_stage_probe/probe_"))
-    } finally {
-      spark.conf.unset(Checkpoints.ReliableKey)
-      spark.conf.unset(Checkpoints.DirKey)
-      spark.conf.unset("spark.graft.staging.dir")
-    }
-  }
 }

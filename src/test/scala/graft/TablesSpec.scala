@@ -124,4 +124,17 @@ class TablesSpec extends SparkSpec {
     got.withWatermark("ts", "1 hour")
     assert(got.selectExpr("unix_micros(ts)").limit(1).count() == 1L)
   }
+
+  test("a symlink cycle under a parquet dir does not trap the signature walk") {
+    val dir = fixtureDir()
+    val table = java.nio.file.Paths.get(dir, "cyclic.parquet")
+    Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(table.toString)
+    // two links back to the table dir: without a guard the walk
+    // follows 2^depth paths until the OS refuses the symlink chain.
+    // Underscore names keep them out of Spark's own file listing.
+    Files.createSymbolicLink(table.resolve("_loop_a"), table)
+    Files.createSymbolicLink(table.resolve("_loop_b"), table)
+    assert(Tables.load(spark, dir, "cyclic").count() == 3L)
+    assert(Tables.load(spark, dir, "cyclic").count() == 3L)
+  }
 }
